@@ -17,6 +17,10 @@ from .schemas import FIXTURE_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: Parquet file size that compaction and the streaming upsert sink's
+#: small-file folding grow files toward.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 #: Columns stored as TIMESTAMP(NANOS) in the fixture parquet.  Spark reads
 #: them as long (``spark.sql.legacy.parquet.nanosAsLong``); we convert to
 #: microsecond timestamps with integer division (`div`), matching DuckDB's
@@ -307,7 +311,7 @@ def _recover_compaction(path: str) -> None:
 def compact_parquet(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     max_concurrency: int = 8,
 ) -> dict:
     """Small-file compaction — the table-maintenance pass every

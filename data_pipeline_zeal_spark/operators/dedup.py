@@ -94,7 +94,13 @@ def jaccard_pairs(
     threshold (exact, O(n^2) pairs — the verification kernel that the LSH
     tier calls on its candidates; exposed standalone for small inputs and
     oracle checking).  Pre-aggregating to distinct shingle sets keeps the
-    join payload small."""
+    join payload small.
+
+    The pair condition tests the id order, then a size bound, before any
+    set intersection: |A∩B| <= min(|A|,|B|) and |A∪B| >= max(|A|,|B|), so
+    J <= min/max, and a pair whose set sizes differ by more than the
+    threshold allows cannot pass (the 1e-6 slack covers the 6-decimal
+    rounding).  Same pairs, fewer intersections."""
     docs = with_min_parallelism(documents).select(
         "doc_id",
         F.array_distinct(word_shingles(tokens("text"), shingle_n)).alias("sh"),
@@ -105,13 +111,14 @@ def jaccard_pairs(
     b = docs.select(
         F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
     )
+    n_a, n_b = F.size(F.col("sh_a")), F.size(F.col("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    jac = F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
+    union = n_a + n_b - inter
+    jac = F.round(F.when(union == 0, F.lit(0.0)).otherwise(inter / union), 6)
+    sizes_allow = F.least(n_a, n_b) >= (threshold - 1e-6) * F.greatest(n_a, n_b)
     return (
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        a.join(b, (F.col("doc_a") < F.col("doc_b")) & sizes_allow & (jac >= threshold))
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
         .orderBy("doc_a", "doc_b")
     )
 

@@ -35,14 +35,21 @@ sink write completes.
 
 from __future__ import annotations
 
+import base64
+import functools
 import os
 import shutil
-from typing import Callable
+import uuid
+from typing import Callable, NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..io import TARGET_FILE_BYTES
 from ..operators.hourly import aggregate_events
 from ..schemas import EVENT_WIRE_SCHEMA, HOURLY_AGGREGATION_SCHEMA
 
@@ -278,17 +285,44 @@ class ParquetUpsertSink:
     """Idempotent keyed upsert into a parquet directory — the fixture-mode
     stand-in for the reference's Postgres ``ON CONFLICT DO UPDATE`` (S5).
 
-    Each micro-batch: read current table, anti-join away rows whose key
-    appears in the batch, union the batch, write to a fresh snapshot dir,
-    swap.  Last-write-wins per (window_start, event_type) — identical to
+    A file-level copy-on-write merge, the way Delta Lake's MERGE rewrites
+    only the files a merge touches.  Each micro-batch is collected once as
+    Arrow (``toArrow``: the batch's one Spark job) and reduced to its last
+    row per key, so it holds at most windows touched x event types rows,
+    whatever the event volume.  The min/max of the key columns that each
+    file's footer records names the files a batch key can fall in; a file
+    whose footer lacks them (one Spark wrote) counts as one of them.  Only
+    those files are read, with pyarrow: their rows whose key
+    the batch carries are dropped, the batch rows added, and the result is
+    written as ONE new file.  Every other file is hard-linked (copied where
+    linking fails) into the new snapshot directory, which then swaps in.
+    Per batch the sink therefore reads and writes the touched files plus
+    the batch, not the table; an empty batch writes nothing.
+
+    Last-write-wins per (window_start, event_type) — identical to
     ``upsert_aggregation.sql:12-19``.  Replayed batches (at-least-once)
     rewrite the same rows: effectively-once.
+
+    Small files fold toward :data:`~..io.TARGET_FILE_BYTES` like a binary
+    counter: the new file also absorbs the file whose key range ends just
+    before its own, while that file is below the target and holds no more
+    rows than the new one.  A stream advancing hour by hour thus keeps
+    O(log hours) small files and rewrites a row O(log hours) times, while
+    a large older file (a backfilled history) stays linked.
+
+    New files take the schema Spark hands the sink, and store timestamps
+    as INT96 like Spark, so ``spark.read.parquet`` and DuckDB read back the
+    same column order and types as from a Spark-written table; rows carried
+    over from a rewritten file are cast to it.  INT96 columns carry no
+    parquet statistics, hence the key ranges in the footer's key-value
+    metadata.  The directory stays flat: ``*.parquet`` files only.
 
     Contract: SINGLE WRITER on a local/posix FS (this is the fixture-mode
     sink; production uses the JDBC upsert, where the DB provides atomicity).
     The two-rename swap has a window where ``path`` is absent; a crash there
     leaves the previous snapshot at ``path.__old_<id>`` and ``__call__``
-    rolls it back on the next invocation."""
+    rolls it back on the next invocation.  A crashed write's
+    ``path.__tmp_<id>`` is cleared before the directory is reused."""
 
     def __init__(self, path: str, keys: list[str] | None = None) -> None:
         self.path = path
@@ -306,18 +340,41 @@ class ParquetUpsertSink:
             os.rename(os.path.join(parent, leftovers[-1]), self.path)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch = batch.dropDuplicates(self.keys)  # one row per key per batch
         self._recover()
-        if os.path.isdir(self.path):
-            current = spark.read.parquet(self.path)
-            merged = current.join(
-                batch.select(*self.keys), on=self.keys, how="left_anti"
-            ).unionByName(batch)
-        else:
-            merged = batch
+        rows = _last_per_key(batch.toArrow(), self.keys)
+        if rows.num_rows == 0:
+            return
+        schema = rows.schema
+        files = _footers(self.path, self.keys, schema)
+        touched, kept = [], []
+        for f in files:
+            (touched if _meets(f, rows, self.keys) else kept).append(f)
+        out = rows
+        if touched:
+            current = pa.concat_tables([_read(f, schema) for f in touched])
+            stale = current.join(
+                rows.select(self.keys), self.keys, join_type="left anti"
+            )
+            out = pa.concat_tables([stale.cast(schema), rows])
+        budget = TARGET_FILE_BYTES - sum(f.size for f in touched)
+        while (prev := _predecessor(kept, out, self.keys[0])) is not None:
+            if prev.num_rows > out.num_rows or prev.size > budget:
+                break
+            out = pa.concat_tables([_read(prev, schema), out])
+            budget -= prev.size
+            kept.remove(prev)
+        out = out.sort_by([(k, "ascending") for k in self.keys])
+
         tmp = f"{self.path}.__tmp_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)  # a crashed write's leftovers
+        os.makedirs(tmp)
+        for f in kept:
+            _link_or_copy(f.path, os.path.join(tmp, os.path.basename(f.path)))
+        _write(
+            out,
+            os.path.join(tmp, f"part-{batch_id:05d}-{uuid.uuid4().hex}.parquet"),
+            self.keys,
+        )
         old = f"{self.path}.__old_{batch_id}"
         if os.path.isdir(self.path):
             os.rename(self.path, old)
@@ -326,6 +383,128 @@ class ParquetUpsertSink:
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)
+
+
+#: Footer key-value entry holding a sink file's key ranges: a two-row (min,
+#: max) table of the key columns as a base64 Arrow IPC stream.  The INT96
+#: timestamps the sink writes, as Spark does, carry no parquet statistics.
+_KEY_RANGES = b"zeal.upsert.key_ranges"
+
+
+class _Footer(NamedTuple):
+    """One table file as its parquet footer describes it.  ``ranges`` is
+    one (min, max) pair per key column, or None when the footer does not
+    record them."""
+
+    path: str
+    size: int
+    num_rows: int
+    ranges: list[tuple[pa.Scalar, pa.Scalar]] | None
+
+
+def _footers(path: str, keys: list[str], schema: pa.Schema) -> list[_Footer]:
+    """The table's files (a flat directory of ``*.parquet``; names starting
+    with ``_`` or ``.`` are ignored as Spark does) with their key ranges,
+    cast to the batch's ``schema``."""
+    if not os.path.isdir(path):
+        return []
+    out = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet") or name.startswith(("_", ".")):
+            continue
+        full = os.path.join(path, name)
+        md = pq.read_metadata(full)
+        ranges = _key_ranges(md, keys, schema)
+        out.append(_Footer(full, os.path.getsize(full), md.num_rows, ranges))
+    return out
+
+
+def _key_ranges(
+    md: pq.FileMetaData, keys: list[str], schema: pa.Schema
+) -> list[tuple[pa.Scalar, pa.Scalar]] | None:
+    """The (min, max) per key column that :func:`_write` recorded in a
+    file's footer, cast to ``schema``; None for a file without them (one
+    written by another tool, such as Spark) or with a null bound."""
+    blob = (md.metadata or {}).get(_KEY_RANGES)
+    if blob is None:
+        return None
+    bounds = pa.ipc.open_stream(base64.b64decode(blob)).read_all()
+    if not set(keys) <= set(bounds.column_names):
+        return None
+    if any(bounds[k].null_count for k in keys):
+        return None
+    return [tuple(bounds[k].cast(schema.field(k).type)) for k in keys]
+
+
+def _write(out: pa.Table, path: str, keys: list[str]) -> None:
+    """Write ``out`` as one parquet file with timestamps as INT96, the type
+    Spark writes, and its key ranges in the footer's key-value metadata."""
+    bounds = pa.table(
+        {k: pa.array([pc.min(out[k]), pc.max(out[k])], out[k].type) for k in keys}
+    )
+    buf = pa.BufferOutputStream()
+    with pa.ipc.new_stream(buf, bounds.schema) as w:
+        w.write_table(bounds)
+    meta = {_KEY_RANGES: base64.b64encode(buf.getvalue().to_pybytes())}
+    pq.write_table(
+        out.replace_schema_metadata(meta), path, use_deprecated_int96_timestamps=True
+    )
+
+
+def _meets(f: _Footer, rows: pa.Table, keys: list[str]) -> bool:
+    """May ``f`` hold a key of ``rows``: does any row's key lie inside the
+    file's per-column ranges?"""
+    if f.ranges is None:
+        return True
+    inside = functools.reduce(
+        pc.and_,
+        (
+            pc.and_(pc.greater_equal(rows[k], lo), pc.less_equal(rows[k], hi))
+            for k, (lo, hi) in zip(keys, f.ranges)
+        ),
+    )
+    return bool(pc.any(inside).as_py())
+
+
+def _predecessor(kept: list[_Footer], out: pa.Table, key: str) -> _Footer | None:
+    """The kept file whose ``key`` range ends last before ``out``'s begins.
+    Kept files always have ranges: a file without them is touched."""
+    start = pc.min(out[key]).as_py()
+    if start is None:  # every key null: nothing orders before it
+        return None
+    end = lambda f: f.ranges[0][1].as_py()  # noqa: E731
+    return max((f for f in kept if end(f) < start), key=end, default=None)
+
+
+def _read(f: _Footer, schema: pa.Schema) -> pa.Table:
+    """A table file's rows in the batch's column order and types (Spark's
+    INT96 timestamps read as UTC microseconds)."""
+    t = pq.read_table(f.path, coerce_int96_timestamp_unit="us")
+    return t.select(schema.names).cast(schema)
+
+
+def _last_per_key(rows: pa.Table, keys: list[str]) -> pa.Table:
+    """One row per key, the last delivered.  The hourly aggregate's update
+    mode already emits one row per window and type; other producers may
+    not."""
+    if rows.num_rows < 2:
+        return rows
+    last = (
+        rows.select(keys)
+        .append_column("row", pa.array(range(rows.num_rows), pa.int64()))
+        .group_by(keys)
+        .aggregate([("row", "max")])
+    )
+    if last.num_rows == rows.num_rows:
+        return rows
+    return rows.take(last["row_max"])
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    try:
+        os.link(src, dst)
+    except OSError:  # e.g. a filesystem without hard links
+        shutil.copy2(src, dst)
 
 
 _UPSERT_ROW_TEMPLATE = "(%s, %s, %s, %s, %s, %s, %s, %s)"

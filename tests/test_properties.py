@@ -1,6 +1,7 @@
 """Property-based tests (Hypothesis): the windowed aggregation operator
 against a brute-force Python model, and MinHash-LSH recall against the
-exact Jaccard ground truth.
+exact Jaccard ground truth, which in turn is checked against the plain
+Jaccard expression.
 """
 
 from __future__ import annotations
@@ -211,6 +212,56 @@ def test_minhash_lsh_recall_vs_exact(spark):
     assert len(exact) > 0
     recall = len(lsh & exact) / len(exact)
     assert recall >= 0.8, f"LSH recall {recall:.2f} over {len(exact)} true pairs"
+
+
+def test_jaccard_pairs_equals_plain_expression(spark):
+    """The exact kernel's size-bound pre-filter drops only pairs the plain
+    Jaccard expression rejects: the same pairs and scores at every
+    threshold, empty and identical documents included."""
+    import functools
+    import random
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from data_pipeline_zeal_spark.functions.textfn import tokens, word_shingles
+    from data_pipeline_zeal_spark.operators.dedup import jaccard_pairs
+
+    rng = random.Random(7)
+    texts = [
+        " ".join(rng.choice("ab") for _ in range(rng.randint(0, 24)))
+        for _ in range(36)
+    ]
+    texts += [texts[5], texts[9] + " a b a", "", "a"]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).localCheckpoint()  # evaluate the Python-side rows once
+
+    sh = docs.select(
+        "doc_id", F.array_distinct(word_shingles(tokens("text"), 3)).alias("sh")
+    )
+    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    jac = F.round(F.when(union == 0, F.lit(0.0)).otherwise(inter / union), 6)
+    plain = sorted(
+        a.join(b, F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .collect()
+    )
+    scores = {r.jaccard for r in plain}
+    # the thresholds below cut between many scores, and two sit on scores
+    # whose 6-decimal rounding goes down (1/3) and up (2/3)
+    assert len(scores) > 10 and {0.333333, 0.666667} <= scores
+    thresholds = [0.0, 0.2, 0.333333, 0.5, 0.666667, 1.0]
+    got = functools.reduce(  # one Spark job for every threshold
+        DataFrame.unionByName,
+        [jaccard_pairs(docs, t).withColumn("t", F.lit(t)) for t in thresholds],
+    ).collect()
+    for t in thresholds:
+        want = [tuple(r) for r in plain if r.jaccard >= t]
+        assert sorted(tuple(r)[:3] for r in got if r.t == t) == want, t
 
 
 # ---------------------------------------------------------------------------

@@ -382,15 +382,26 @@ def test_per_file_stats_and_file_level_pruning(spark, tmp_path):
     assert sorted(got.inputFiles())[0].endswith(paths[0].split("/")[-1])
 
 
+def _strided(spark, ids: range, n: int):
+    """``_df`` rows of ``ids`` in ``n`` partitions, partition k holding
+    ``ids[k::n]``."""
+    rows = [(i, i * 2) for k in range(n) for i in ids[k::n]]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, n), "id long, v long"
+    )
+
+
 def test_compact_cluster_by_tightens_skipping(spark, tmp_path):
     """OPTIMIZE with clustering: after interleaved appends (every file
     spans the full id range — nothing file-prunable), compacting with
     cluster_by must yield per-file disjoint bounds so the same predicate
     suddenly skips most files."""
     t = str(tmp_path / "tbl")
-    # two appends, each shuffled across the id range -> useless bounds
-    a = _df(spark, 0, 400).filter("id % 2 = 0").repartition(4)
-    b = _df(spark, 0, 400).filter("id % 2 = 1").repartition(4)
+    # two appends of 4 files, each file a stride over the id range (so
+    # every file holds ids near both ends at any core count) -> useless
+    # bounds
+    a = _strided(spark, range(0, 400, 2), 4)
+    b = _strided(spark, range(1, 400, 2), 4)
     V.commit_write(a, t, mode="overwrite")
     V.commit_write(b, t, mode="append")
     pred = [("id", ">=", 390)]
